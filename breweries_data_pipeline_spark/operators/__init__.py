@@ -34,14 +34,20 @@ from breweries_data_pipeline_spark.operators.temporal import (  # noqa: F401
     range_join_bucketed,
 )
 from breweries_data_pipeline_spark.operators.dedup import (  # noqa: F401
+    bucket_pairs,
+    bucket_star_edges,
     build_shingle_index,
     dedup_incremental,
+    drop_non_representatives,
     exact_dedup,
+    md5_minhash_signatures,
+    minhash_band_rows,
     near_dedup_against_index,
     near_dedup_incremental,
     prefix_filtered_similarity_join,
     read_shingle_index,
     read_shingle_index_bucketed,
+    verify_jaccard_pairs,
     write_shingle_index,
     write_shingle_index_bucketed,
 )

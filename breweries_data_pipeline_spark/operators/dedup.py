@@ -5,16 +5,39 @@ Design for 100 TB — the non-negotiable rule is that candidate
 generation is ALWAYS a bucketed equi-join (shuffle on a bucket key),
 never an all-pairs crossJoin:
 
-- exact dedup: md5 fingerprint -> one shuffle on the fingerprint.
+- exact dedup: md5 fingerprint -> min-id aggregate per fingerprint
+  (map-side partial) + semi-join back on the id.
 - MinHash-LSH: signature is a narrow map (no explode, no shuffle);
   banding explodes to ``bands`` rows per doc; candidates come from a
-  self equi-join on ``(band, band_hash)`` so only same-bucket docs
-  ever meet. Verification re-checks candidates with exact n-gram
-  Jaccard (two hash joins against the shingle table).
+  self equi-join on the bucket key so only same-bucket docs ever
+  meet. Verification re-checks candidates with exact n-gram Jaccard
+  (two hash joins against the shingle table).
 - SimHash: 64-bit signature via one token explode + groupBy(doc);
   candidates via the pigeonhole block trick (hamming <= k over 4
   blocks of 16 bits => at least one block equal when k <= 3), again a
   self equi-join on the block value.
+
+This module is the ONE place an LSH pipeline is built. Two signature
+families, each with its band builder:
+
+- Arrow path: :func:`minhash_signatures` (seeded affine family over
+  xxhash64 token hashes, numpy kernel) banded by xxhash64 of each
+  band's slice -> bucket key ``(band, band_hash)``.
+- md5 path: :func:`md5_minhash_signatures` (16 lanes from md5
+  digests, reproducible by a SQL engine) banded by
+  :func:`minhash_band_rows` -> bucket key ``(band, v0..v3)``.
+
+Every downstream step exists once and takes the bucket key columns as
+a parameter, so both families share it:
+
+- :func:`bucket_pairs` — self equi-join on the bucket key, ``id_a <
+  id_b``, distinct: the clique candidate pairs.
+- :func:`bucket_star_edges` — per bucket, min-id rep -> member edges
+  (linear in bucket size; same components as the clique).
+- :func:`verify_jaccard_pairs` — exact Jaccard over the two docs'
+  distinct shingle arrays, kept at >= threshold.
+- :func:`drop_non_representatives` — connected components over an
+  edge stream; keep each component's minimum id.
 
 Hash family: seeded ``xxhash64(value, i)`` — pure JVM, and avoids
 ``(a*h+b) mod p`` arithmetic that overflows long under ANSI mode.
@@ -28,17 +51,36 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from breweries_data_pipeline_spark.cache import track_persist
-from breweries_data_pipeline_spark.functions.text import ngram_jaccard
+from breweries_data_pipeline_spark.functions.text import (
+    ngram_jaccard,
+    normalized_text,
+)
 from breweries_data_pipeline_spark.operators.clean import deduplicate
 from breweries_data_pipeline_spark.operators.text import with_fingerprint
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact text dedup: md5 of whitespace-normalized text, keep the
-    smallest id per fingerprint (deterministic, replayable). One
-    shuffle on the fingerprint — the hash key is uniform by
-    construction, so no skew at any scale."""
-    return deduplicate(with_fingerprint(df, text_col), ["fingerprint"], order_by=[id_col])
+    smallest id per fingerprint (deterministic, replayable); the rows
+    keep every input column plus ``fingerprint``.
+
+    Precondition: ``id_col`` is unique. The survivor set is a min-id
+    aggregate per fingerprint semi-joined back on the id, so a
+    duplicated id would keep every row that carries the winning id.
+
+    Plan: the aggregate is map-side partial over (fingerprint, id)
+    pairs, so a hot fingerprint (a boilerplate page repeated millions
+    of times) collapses per map task before its exchange; the text
+    payload is re-keyed only by the uniform id for the semi-join. A
+    ``row_number`` window per fingerprint would send every row of a hot
+    fingerprint, text included, to one task (AQE cannot split a window
+    partition)."""
+    keep = (
+        df.groupBy(F.md5(normalized_text(text_col)).alias("__fp"))
+        .agg(F.min(id_col).alias(id_col))
+        .select(id_col)
+    )
+    return with_fingerprint(df, text_col).join(keep, id_col, "semi")
 
 
 # seeded affine family for the MinHash minima: sig_i = min over
@@ -261,77 +303,93 @@ def minhash_signatures(
     ).select(id_col, F.col("_s.shingles").alias("shingles"), F.col("_s.minhash").alias("minhash"))
 
 
-def lsh_candidate_pairs(
-    sig_df: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Banded LSH: docs agreeing on ALL rows of at least one band meet
-    in a bucket. Returns distinct (id_a, id_b) with id_a < id_b.
+def md5_minhash_signatures(shingle_stream: DataFrame, n: int = 16, carry: tuple = ()) -> DataFrame:
+    """(doc_id, h0..h{n-1}) min-hash signature from an exploded
+    (doc_id, s) shingle stream — the md5-lane family a SQL engine can
+    reproduce bit-for-bit. The lane values are a pure function of the
+    SHINGLE (n/4 md5 digests split into four 32-bit lanes each), and
+    shingles repeat heavily across documents (sf0.1: 260k exploded
+    rows over 27k distinct shingles, a 9.6x duplication factor) — so
+    the digest chain runs once per DISTINCT shingle and the small
+    (shingle, lanes) table is broadcast-joined back onto the stream
+    (guide §2.3: don't compute per row what a 4 MB lookup determines;
+    sharing one digest across four lanes had already cut md5 count
+    4x). The distinct pass is a map-side-combined hash aggregate
+    (skew-proof: a Zipf-head shingle collapses per map task), the
+    join-back a BroadcastHashJoin, so the exploded stream still never
+    shuffles before the per-doc min aggregate. Corpora whose distinct
+    shingle set exceeds broadcast capacity drop the hint via
+    ``spark.breweries.dedup.broadcastFreq`` (see :func:`_freq_hint`):
+    the join-back then shuffles, which AQE skew handling can split.
+    ``carry`` names extra per-doc columns to keep (constant within a
+    doc_id — they join the grouping key, which costs nothing since
+    doc_id already determines them).
 
-    b=16, r=4 puts the S-curve threshold near (1/16)^(1/4) ~= 0.5
-    Jaccard. Candidate generation is a self equi-join on
-    (band, band_hash): shuffle keyed by the band hash — bucketed,
-    never all-pairs. A pathological bucket (thousands of identical
-    docs) produces a quadratic bucket locally; the exact-dedup pass
-    should run first so LSH only sees unique texts.
-    """
-    band_structs = F.array(
+    Null shingles are dropped: a doc whose shingles are all null has
+    NO signature row (a min over zero lanes would be all-null)."""
+    # null shingles carry no lanes; drop them explicitly rather than
+    # rely on the inner join-back below discarding null keys
+    sh = shingle_stream.where(F.col("s").isNotNull())
+    digs = sh.select("s").distinct().select(
+        "s",
         *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.xxhash64(F.slice("minhash", j * rows_per_band + 1, rows_per_band)).alias(
-                    "band_hash"
-                ),
+            F.md5(F.concat(F.col("s"), F.lit(f":mh{g}"))).alias(f"__d{g}")
+            for g in range((n + 3) // 4)
+        ],
+    )
+    lanes = digs.select(
+        "s",
+        *[
+            F.conv(
+                F.substring(F.col(f"__d{r // 4}"), (r % 4) * 8 + 1, 8), 16, 10
+            ).cast("long").alias(f"__l{r}")
+            for r in range(n)
+        ],
+    )
+    return sh.join(_freq_hint(lanes), "s").groupBy("doc_id", *carry).agg(
+        *[F.min(f"__l{r}").alias(f"h{r}") for r in range(n)]
+    )
+
+
+def minhash_band_rows(sig: DataFrame, n_bands: int = 4, rows: int = 4,
+                      carry: tuple = ()) -> DataFrame:
+    """(doc_id, band, v0..v{rows-1}) from an md5 signature table via ONE
+    explode of an array of band structs — a single pass over sig. (The
+    union-of-projections spelling recomputes the signature aggregate
+    once per band: Catalyst does not reuse non-cached exchanges across
+    union branches.) The bucket key is ``band, v0..v{rows-1}``.
+    ``carry`` names extra sig columns to ride along (e.g. an exact-dup
+    multiplicity weight)."""
+    return sig.select(
+        "doc_id",
+        *carry,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        *[
+                            F.col(f"h{b * rows + i}").alias(f"v{i}")
+                            for i in range(rows)
+                        ],
+                    )
+                    for b in range(n_bands)
+                ]
             )
-            for j in range(bands)
-        ]
-    )
-    buckets = (
-        sig_df.select(F.col(id_col), F.explode(band_structs).alias("b"))
-        .select(id_col, "b.band", "b.band_hash")
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col(f"a.band") == F.col(f"b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
+        ).alias("__b"),
+    ).select(
+        "doc_id",
+        *carry,
+        F.col("__b.band").alias("band"),
+        *[F.col(f"__b.v{i}").alias(f"v{i}") for i in range(rows)],
     )
 
 
-def lsh_bucket_star_edges(
-    sig_df: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 16,
-    rows_per_band: int = 4,
-) -> DataFrame:
-    """Verification-free LSH clustering edges with LINEAR candidate
-    volume: per (band, band_hash) bucket, emit one STAR edge
-    (bucket_min_id -> member) per non-minimum member instead of the
-    bucket's full C(n,2) clique. A star and a clique over the same
-    vertex set have identical connected components, so any
-    CC-consuming dedup sees EXACTLY the same clusters — but a
-    pathological bucket of k near-identical docs costs k-1 edge rows
-    instead of k(k-1)/2 pair rows, and there is NO self-join at all:
-    the plan is one groupBy(bucket) min + one join back, both keyed
-    by the band hash.
-
-    This is the web-scale operating point where the banding IS the
-    duplicate decision (choose bands x rows so the S-curve puts
-    P(bucket-share | J below threshold) low) — the pair-verifying
-    path (lsh_candidate_pairs + exact Jaccard) stays the
-    high-precision mode, and is inherently quadratic in clique size
-    because its OUTPUT is the pairs. Singleton buckets are dropped
-    before the join (no edges to contribute), so edge volume is
-    bounded by bucket memberships of docs that actually collide.
-    """
+def _xxhash_band_rows(sig_df: DataFrame, id_col: str, bands: int,
+                      rows_per_band: int) -> DataFrame:
+    """(id, band, band_hash) from an Arrow-path signature table: each
+    band's ``rows_per_band`` slice of ``minhash`` hashed to one long.
+    The bucket key is ``band, band_hash``."""
     band_structs = F.array(
         *[
             F.struct(
@@ -343,25 +401,156 @@ def lsh_bucket_star_edges(
             for j in range(bands)
         ]
     )
-    # persisted: the bucket table feeds BOTH the per-bucket min
-    # aggregate and the join-back; without it the upstream signature
-    # kernel (the expensive part) runs twice. 20 bytes/row
-    # (id + band + hash), tracked for bulk release.
-    buckets = track_persist(
-        sig_df.select(
-            F.col(id_col), F.explode(band_structs).alias("b")
-        ).select(id_col, "b.band", "b.band_hash")
+    return sig_df.select(
+        F.col(id_col), F.explode(band_structs).alias("b")
+    ).select(id_col, "b.band", "b.band_hash")
+
+
+def bucket_pairs(bands: DataFrame, keys: list[str], id_col: str = "doc_id") -> DataFrame:
+    """Clique candidates: distinct (id_a, id_b), id_a < id_b, for every
+    two docs sharing a bucket. A self equi-join on ``keys`` — shuffle
+    keyed by the bucket, never all-pairs — but its OUTPUT is each
+    bucket's C(k,2) clique, so a pathological bucket (thousands of
+    identical docs) is quadratic; run exact dedup first, or use
+    :func:`bucket_star_edges` when components are all that matter.
+    The caller persists ``bands`` if its lineage is expensive: both
+    join sides read it."""
+    left = bands.select(F.col(id_col).alias("id_a"), *keys)
+    right = bands.select(F.col(id_col).alias("id_b"), *keys)
+    return (
+        left.join(right, keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
     )
+
+
+def bucket_star_edges(bands: DataFrame, keys: list[str], id_col: str = "doc_id") -> DataFrame:
+    """Star edges (band, id_a=bucket min id, id_b=member) with LINEAR
+    volume: per bucket, one edge per non-minimum member instead of the
+    bucket's C(k,2) clique. A star and a clique over the same vertex
+    set have identical connected components, so any CC-consuming dedup
+    sees EXACTLY the same clusters — but a bucket of k near-identical
+    docs costs k-1 edge rows, and there is NO self-join: one
+    groupBy(bucket) min + one join back, both keyed by the bucket.
+    Singleton buckets are dropped before the join. ``keys`` must
+    include ``band``. Rows are not deduplicated (a pair sharing
+    several bands repeats); the caller takes the distinct it needs,
+    and persists ``bands`` (read by both the aggregate and the
+    join-back)."""
     rep = (
-        buckets.groupBy("band", "band_hash")
+        bands.groupBy(*keys)
         .agg(F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__n"))
         .filter(F.col("__n") > 1)
         .drop("__n")
     )
     return (
-        buckets.join(rep, ["band", "band_hash"])
+        bands.join(rep, keys)
         .filter(F.col(id_col) != F.col("__rep"))
-        .select(F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b"))
+        .select("band", F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b"))
+    )
+
+
+def drop_non_representatives(df: DataFrame, edges: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """``df`` minus every row that is not its connected component's
+    minimum id, components taken over the (id_a, id_b) ``edges``. The
+    CC label table holds only ids that appear in some edge, so the
+    iterative step is sized by the duplicates, not the corpus; rows
+    absent from ``edges`` always survive. The caller persists
+    ``edges`` (read by the node projection and the CC)."""
+    from breweries_data_pipeline_spark.operators.graph import (
+        connected_components,
+    )
+
+    paired = (
+        edges.select(F.col("id_a").alias(id_col))
+        .unionByName(edges.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    comp = connected_components(
+        edges, paired, src="id_a", dst="id_b", id_col=id_col
+    )
+    drop = comp.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
+    return df.join(drop, id_col, "left_anti")
+
+
+def _pair_set_sizes(pairs: DataFrame, sets: DataFrame) -> tuple[DataFrame, Column, Column]:
+    """``pairs`` joined to both docs' shingle arrays, with the
+    intersection and union size expressions over them. ``sets`` is
+    (id, distinct shingle array), matched to ``id_a`` / ``id_b``."""
+    id_col, set_col = sets.columns
+    sa = sets.select(F.col(id_col).alias("id_a"), F.col(set_col).alias("__sa"))
+    sb = sets.select(F.col(id_col).alias("id_b"), F.col(set_col).alias("__sb"))
+    inter = F.size(F.array_intersect("__sa", "__sb"))
+    union = F.size(F.array_distinct(F.concat("__sa", "__sb")))
+    return pairs.join(sa, "id_a").join(sb, "id_b"), inter, union
+
+
+def verify_jaccard_pairs(cand: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) for the candidate pairs whose exact
+    Jaccard over distinct shingle arrays is >= ``threshold``, as a
+    double ratio of integer sizes (bit-stable across engines).
+    ``sets`` is (id, distinct shingle array); the two hash joins touch
+    only candidate ids, so AQE broadcasts the candidate side when
+    candidates are rare. The caller persists ``sets`` if it also feeds
+    the signature."""
+    joined, inter, union = _pair_set_sizes(cand, sets)
+    return joined.select(
+        "id_a",
+        "id_b",
+        (inter.cast("double") / union.cast("double")).alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def lsh_candidate_pairs(
+    sig_df: DataFrame,
+    id_col: str = "doc_id",
+    bands: int = 16,
+    rows_per_band: int = 4,
+) -> DataFrame:
+    """Banded LSH: docs agreeing on ALL rows of at least one band meet
+    in a bucket. Returns distinct (id_a, id_b) with id_a < id_b.
+
+    b=16, r=4 puts the S-curve threshold near (1/16)^(1/4) ~= 0.5
+    Jaccard. Candidate generation is :func:`bucket_pairs` on
+    (band, band_hash). A pathological bucket (thousands of identical
+    docs) produces a quadratic bucket locally; the exact-dedup pass
+    should run first so LSH only sees unique texts.
+    """
+    return bucket_pairs(
+        _xxhash_band_rows(sig_df, id_col, bands, rows_per_band),
+        ["band", "band_hash"],
+        id_col,
+    )
+
+
+def lsh_bucket_star_edges(
+    sig_df: DataFrame,
+    id_col: str = "doc_id",
+    bands: int = 16,
+    rows_per_band: int = 4,
+) -> DataFrame:
+    """Verification-free LSH clustering edges with LINEAR candidate
+    volume: distinct (id_a, id_b) :func:`bucket_star_edges` over the
+    (band, band_hash) buckets.
+
+    This is the web-scale operating point where the banding IS the
+    duplicate decision (choose bands x rows so the S-curve puts
+    P(bucket-share | J below threshold) low) — the pair-verifying
+    path (lsh_candidate_pairs + exact Jaccard) stays the
+    high-precision mode, and is inherently quadratic in clique size
+    because its OUTPUT is the pairs.
+    """
+    # persisted: the bucket table feeds BOTH the per-bucket min
+    # aggregate and the join-back; without it the upstream signature
+    # kernel (the expensive part) runs twice. 20 bytes/row
+    # (id + band + hash), tracked for bulk release.
+    buckets = track_persist(
+        _xxhash_band_rows(sig_df, id_col, bands, rows_per_band)
+    )
+    return (
+        bucket_star_edges(buckets, ["band", "band_hash"], id_col)
+        .select("id_a", "id_b")
         .distinct()
     )
 
@@ -393,20 +582,7 @@ def near_dedup_lsh_buckets(
     edges = track_persist(
         lsh_bucket_star_edges(sigs, id_col, bands, num_hashes // bands)
     )
-    from breweries_data_pipeline_spark.operators.graph import (
-        connected_components,
-    )
-
-    paired = (
-        edges.select(F.col("id_a").alias(id_col))
-        .unionByName(edges.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    comp = connected_components(
-        edges, paired, src="id_a", dst="id_b", id_col=id_col
-    )
-    drop = comp.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
-    return df.join(drop, id_col, "left_anti")
+    return drop_non_representatives(df, edges, id_col)
 
 
 def collapse_exact_text_duplicates(
@@ -585,20 +761,7 @@ def near_dedup_minhash(
     if not chain_safe:
         dup_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
         return df.join(dup_ids, id_col, "left_anti")
-    from breweries_data_pipeline_spark.operators.graph import (
-        connected_components,
-    )
-
-    paired = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    comp = connected_components(
-        pairs, paired, src="id_a", dst="id_b", id_col=id_col
-    )
-    drop = comp.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
-    return df.join(drop, id_col, "left_anti")
+    return drop_non_representatives(df, pairs, id_col)
 
 
 def _simhash_udf() -> Column:

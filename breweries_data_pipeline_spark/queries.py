@@ -41,12 +41,19 @@ from breweries_data_pipeline_spark.functions.text import (
     tokens,
 )
 from breweries_data_pipeline_spark.operators.dedup import (
+    _pair_set_sizes,
+    bucket_pairs,
+    bucket_star_edges,
+    drop_non_representatives,
     exact_dedup,
+    md5_minhash_signatures,
+    minhash_band_rows,
     near_dedup_incremental,
     near_dedup_lsh_buckets,
     near_dedup_minhash,
     simhash_near_dup_pairs,
     verified_near_dup_pairs,
+    verify_jaccard_pairs,
 )
 from breweries_data_pipeline_spark.operators.joins import anti_join, dim_join, semi_join
 from breweries_data_pipeline_spark.operators.similarity import ann_topk, cosine_topk
@@ -1426,13 +1433,13 @@ _SQL_SHINGLES = _sql_shingles(3)
 )
 def q_dedup_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 exact text dedup: md5 of whitespace-normalized text, keep the
-    smallest doc_id per fingerprint. One shuffle on the fingerprint.
-    The hash VALUES are uniform, but occurrence counts are not — a
-    boilerplate page repeated millions of times is one hot
-    fingerprint group. For such corpora route through
-    ``deduplicate_salted`` (two-phase, q_dedup_salted) or a
-    groupBy-min + re-join; this form is right when dup clusters are
-    bounded."""
+    smallest doc_id per fingerprint. The hash VALUES are uniform, but
+    occurrence counts are not — a boilerplate page repeated millions
+    of times is one hot fingerprint group — so ``exact_dedup`` elects
+    survivors with a map-side-partial min-id aggregate per fingerprint
+    and semi-joins them back on the uniform doc_id, never sending a
+    hot group's rows to one task (the oracle keeps the row_number
+    spelling)."""
     docs = read_table(spark, sf_dir, "documents")
     return exact_dedup(docs).select("doc_id", "fingerprint")
 
@@ -9010,85 +9017,9 @@ def _sql_minhash_cols(n: int = 16) -> str:
     )
 
 
-def _minhash_sig(sh, n: int = 16, carry: tuple = ()):
-    """(doc_id, h0..h{n-1}) min-hash signature from an exploded
-    (doc_id, s) shingle stream. The lane values are a pure function of
-    the SHINGLE (n/4 md5 digests split into four 32-bit lanes each,
-    mirroring _sql_minhash_cols exactly), and shingles repeat heavily
-    across documents (sf0.1: 260k exploded rows over 27k distinct
-    shingles, a 9.6x duplication factor) — so r13 computes the digest
-    chain once per DISTINCT shingle and broadcast-joins the small
-    (shingle, lanes) table back onto the stream (guide §2.3: don't
-    compute per row what a 4 MB lookup determines; r12 had already cut
-    md5 count 4x by sharing digests across lanes, 9.1 s -> ~4 s).
-    The distinct pass is a map-side-combined hash aggregate
-    (skew-proof: a Zipf-head shingle collapses per map task), the
-    join-back a BroadcastHashJoin, so the exploded stream still never
-    shuffles before the per-doc min aggregate. Corpora whose distinct
-    shingle set exceeds broadcast capacity drop the hint via
-    ``spark.breweries.dedup.broadcastFreq`` (shared with the
-    dedup-operator frequency tables): the join-back then shuffles,
-    which AQE skew handling can split.
-    ``carry`` names extra per-doc columns to keep (constant within a
-    doc_id — they join the grouping key, which costs nothing since
-    doc_id already determines them)."""
-    digs = sh.select("s").distinct().select(
-        "s",
-        *[
-            F.md5(F.concat(F.col("s"), F.lit(f":mh{g}"))).alias(f"__d{g}")
-            for g in range((n + 3) // 4)
-        ],
-    )
-    lanes = digs.select(
-        "s",
-        *[
-            F.conv(
-                F.substring(F.col(f"__d{r // 4}"), (r % 4) * 8 + 1, 8), 16, 10
-            ).cast("long").alias(f"__l{r}")
-            for r in range(n)
-        ],
-    )
-    bcast = sh.sparkSession.conf.get(
-        "spark.breweries.dedup.broadcastFreq", "true"
-    )
-    if str(bcast).lower() == "true":
-        lanes = F.broadcast(lanes)
-    return sh.join(lanes, "s").groupBy("doc_id", *carry).agg(
-        *[F.min(f"__l{r}").alias(f"h{r}") for r in range(n)]
-    )
-
-
-def _minhash_band_rows(sig, n_bands: int = 4, rows: int = 4,
-                       carry: tuple = ()):
-    """(doc_id, band, v0..v3) from a signature table via ONE explode of
-    an array of band structs — a single pass over sig. (The 4-way
-    union-of-projections spelling recomputes the signature aggregate
-    once per band: Catalyst does not reuse non-cached exchanges across
-    union branches.) ``carry`` names extra sig columns to ride along
-    (e.g. an exact-dup multiplicity weight)."""
-    return sig.select(
-        "doc_id",
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        *[
-                            F.col(f"h{b * rows + i}").alias(f"v{i}")
-                            for i in range(rows)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__b"),
-    ).select(
-        "doc_id",
-        *carry,
-        F.col("__b.band").alias("band"),
-        *[F.col(f"__b.v{i}").alias(f"v{i}") for i in range(rows)],
-    )
+# bucket key of the md5-lane banding (minhash_band_rows, 4 bands x 4
+# rows) every md5 MinHash query in this registry uses
+_MD5_BUCKET_KEYS = ["band", "v0", "v1", "v2", "v3"]
 
 
 def _sql_minhash_bands(n_bands: int = 4, rows: int = 4) -> str:
@@ -9164,37 +9095,9 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(_persist)
     sh = shs.select("doc_id", F.explode("s").alias("s"))
 
-    sig = _persist(_minhash_sig(sh))
-    bands = _minhash_band_rows(sig)
-    left = bands.select(
-        F.col("doc_id").alias("id_a"), "band", "v0", "v1", "v2", "v3"
-    )
-    right = bands.select(
-        F.col("doc_id").alias("id_b"), "band", "v0", "v1", "v2", "v3"
-    )
-    cand = (
-        left.join(right, ["band", "v0", "v1", "v2", "v3"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = shs.select(F.col("doc_id").alias("id_a"), F.col("s").alias("__sa"))
-    sb = shs.select(F.col("doc_id").alias("id_b"), F.col("s").alias("__sb"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("__sa", "__sb")).cast("double")
-                / F.size(
-                    F.array_distinct(F.concat("__sa", "__sb"))
-                ).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-    )
+    sig = _persist(md5_minhash_signatures(sh))
+    cand = bucket_pairs(minhash_band_rows(sig), _MD5_BUCKET_KEYS)
+    return verify_jaccard_pairs(cand, shs, 0.5)
 
 
 @register(
@@ -9245,9 +9148,10 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 VERIFICATION-FREE LSH dedup with a full oracle — the
-    bucket-star mode (operators/dedup.py:lsh_bucket_star_edges /
-    near_dedup_lsh_buckets) realized on the md5 lane family so DuckDB
-    reproduces it bit-for-bit: same bucket in ANY band implies same
+    bucket-star mode (operators/dedup.py:bucket_star_edges /
+    drop_non_representatives, the composition near_dedup_lsh_buckets
+    runs on the xxhash64 family) realized on the md5 lane family so
+    DuckDB reproduces it bit-for-bit: same bucket in ANY band implies same
     cluster; keep each connected component's minimum doc_id. The
     banding (4 bands x 4 rows here) IS the duplicate decision — no
     pair-level Jaccard verification.
@@ -9272,36 +9176,13 @@ def q_dedup_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted (tracked): bands feeds the per-bucket min AND the
     # join-back; edges feeds the node projection AND the CC — without
     # these the md5 signature aggregate recomputes 3x
-    bands = _persist(_minhash_band_rows(_minhash_sig(sh)))
-    keys = ["band", "v0", "v1", "v2", "v3"]
-    rep = (
-        bands.groupBy(*keys)
-        .agg(F.min("doc_id").alias("__rep"), F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .drop("__n")
-    )
+    bands = _persist(minhash_band_rows(md5_minhash_signatures(sh)))
     edges = _persist(
-        bands.join(rep, keys)
-        .filter(F.col("doc_id") != F.col("__rep"))
-        .select(F.col("__rep").alias("id_a"), F.col("doc_id").alias("id_b"))
+        bucket_star_edges(bands, _MD5_BUCKET_KEYS)
+        .select("id_a", "id_b")
         .distinct()
     )
-    from breweries_data_pipeline_spark.operators.graph import (
-        connected_components,
-    )
-
-    paired = (
-        edges.select(F.col("id_a").alias("doc_id"))
-        .unionByName(edges.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    comp = connected_components(
-        edges, paired, src="id_a", dst="id_b", id_col="doc_id"
-    )
-    drop = comp.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        "doc_id"
-    )
-    return docs.join(drop, "doc_id", "left_anti").select(
+    return drop_non_representatives(docs, edges).select(
         "doc_id", "lang", "source"
     )
 
@@ -9431,37 +9312,15 @@ def q_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.array_distinct(shingles("text", 3)).alias("s")
     ).transform(_persist)
     sh = shs.select("doc_id", F.explode("s").alias("s"))
-    bands = _persist(_minhash_band_rows(_minhash_sig(sh)))
-    keys = ["band", "v0", "v1", "v2", "v3"]
-    rep = (
-        bands.groupBy(*keys)
-        .agg(F.min("doc_id").alias("__rep"), F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .drop("__n")
-    )
-    e = (
-        bands.join(rep, keys)
-        .filter(F.col("doc_id") != F.col("__rep"))
-        .select(
-            "band",
-            F.col("__rep").alias("id_a"),
-            F.col("doc_id").alias("id_b"),
-        )
-        .distinct()
-    )
-    sa = shs.select(F.col("doc_id").alias("id_a"), F.col("s").alias("__sa"))
-    sb = shs.select(F.col("doc_id").alias("id_b"), F.col("s").alias("__sb"))
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("long")
-    uni = F.size(F.array_distinct(F.concat("__sa", "__sb"))).cast("long")
-    v = (
-        e.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "band",
-            F.when(inter * 1_000_000 >= 500_000 * uni, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("ok"),
-        )
+    bands = _persist(minhash_band_rows(md5_minhash_signatures(sh)))
+    e = bucket_star_edges(bands, _MD5_BUCKET_KEYS).distinct()
+    joined, inter, uni = _pair_set_sizes(e, shs)
+    inter, uni = inter.cast("long"), uni.cast("long")
+    v = joined.select(
+        "band",
+        F.when(inter * 1_000_000 >= 500_000 * uni, F.lit(1))
+        .otherwise(F.lit(0))
+        .alias("ok"),
     )
     return (
         v.groupBy("band")
@@ -9745,27 +9604,13 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline, with counts computed as five tiny aggregates over the
     shared lineage (Catalyst reuses the scan; no stage re-reads the
     corpus from disk)."""
-    from breweries_data_pipeline_spark.functions.text import normalized_text
-
     raw = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     quality = raw.filter(F.size(tokens("text")) >= 20)
-    # exact dedup as min-id aggregate + semi-join (r13): the window
-    # form shuffled (doc_id, text) by the TEXT FINGERPRINT — on a
-    # dup-dense corpus the boilerplate fingerprint owns one window
-    # partition (the same hot-key-window hazard as the r12 verdict's
-    # count-window item; AQE cannot split it). The aggregate is
-    # map-side partial min over ~40-byte (fp, id) pairs and the
-    # semi-join re-keys the text payload by the UNIFORM doc_id.
-    # Row-identical: doc_id is unique, so the min-id row per
-    # fingerprint IS the window's rn=1 row. Persisted: the survivor
-    # set feeds shingling, verification, the near-dup anti-join AND
-    # the stage counts.
-    keep = (
-        quality.groupBy(F.md5(normalized_text("text")).alias("__fp"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    exact = quality.join(keep, "doc_id", "semi").transform(_persist)
+    # exact_dedup's min-id aggregate + semi-join (skew-safe on a hot
+    # fingerprint; see its docstring). Persisted: the survivor set
+    # feeds shingling, verification, the near-dup anti-join AND the
+    # stage counts.
+    exact = exact_dedup(quality).drop("fingerprint").transform(_persist)
 
     from breweries_data_pipeline_spark.operators.dedup import (
         _ensure_parallelism,
@@ -9776,28 +9621,10 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(_persist)
     sh = shs.select("doc_id", F.explode("s").alias("s"))
 
-    sig = _persist(_minhash_sig(sh))
-    bands = _minhash_band_rows(sig)
-    cand = (
-        bands.select(F.col("doc_id").alias("id_a"), "band", "v0", "v1", "v2", "v3")
-        .join(
-            bands.select(
-                F.col("doc_id").alias("id_b"), "band", "v0", "v1", "v2", "v3"
-            ),
-            ["band", "v0", "v1", "v2", "v3"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    sig = _persist(md5_minhash_signatures(sh))
+    cand = bucket_pairs(minhash_band_rows(sig), _MD5_BUCKET_KEYS)
     drops = (
-        cand.join(shs.select(F.col("doc_id").alias("id_a"), F.col("s").alias("__sa")), "id_a")
-        .join(shs.select(F.col("doc_id").alias("id_b"), F.col("s").alias("__sb")), "id_b")
-        .filter(
-            F.size(F.array_intersect("__sa", "__sb")).cast("double")
-            / F.size(F.array_distinct(F.concat("__sa", "__sb"))).cast("double")
-            >= 0.5
-        )
+        verify_jaccard_pairs(cand, shs, 0.5)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )
@@ -9954,57 +9781,26 @@ def q_corpus_funnel_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     size); this twin is the 100 TB operating point: every stage is
     linear in docs, measured through two decades in SCALE.md
     round-7e. Full oracle including the recursive-CTE closure."""
-    from breweries_data_pipeline_spark.functions.text import normalized_text
     from breweries_data_pipeline_spark.operators.corpus import hash_bucket
     from breweries_data_pipeline_spark.operators.dedup import (
         _ensure_parallelism,
     )
-    from breweries_data_pipeline_spark.operators.graph import (
-        connected_components,
-    )
 
     raw = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     quality = raw.filter(F.size(tokens("text")) >= 20)
-    # min-id aggregate + semi-join exact dedup (r13) — see
-    # q_corpus_funnel for the hot-fingerprint-window skew argument;
-    # row-identical because doc_id is unique
-    keep = (
-        quality.groupBy(F.md5(normalized_text("text")).alias("__fp"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    exact = quality.join(keep, "doc_id", "semi").transform(_persist)
+    exact = exact_dedup(quality).drop("fingerprint").transform(_persist)
     sh = _ensure_parallelism(exact, key="doc_id").select(
         "doc_id", F.explode(F.array_distinct(shingles("text", 3))).alias("s")
     )
     # same tracked-persist discipline as q_dedup_lsh_buckets: bands
     # and edges both fan out to two consumers
-    bands = _persist(_minhash_band_rows(_minhash_sig(sh)))
-    keys = ["band", "v0", "v1", "v2", "v3"]
-    rep = (
-        bands.groupBy(*keys)
-        .agg(F.min("doc_id").alias("__rep"), F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .drop("__n")
-    )
+    bands = _persist(minhash_band_rows(md5_minhash_signatures(sh)))
     edges = _persist(
-        bands.join(rep, keys)
-        .filter(F.col("doc_id") != F.col("__rep"))
-        .select(F.col("__rep").alias("id_a"), F.col("doc_id").alias("id_b"))
+        bucket_star_edges(bands, _MD5_BUCKET_KEYS)
+        .select("id_a", "id_b")
         .distinct()
     )
-    paired = (
-        edges.select(F.col("id_a").alias("doc_id"))
-        .unionByName(edges.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    comp = connected_components(
-        edges, paired, src="id_a", dst="id_b", id_col="doc_id"
-    )
-    drop = comp.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        "doc_id"
-    )
-    neardup = exact.join(drop, "doc_id", "left_anti").select("doc_id")
+    neardup = drop_non_representatives(exact, edges).select("doc_id")
     return _funnel_stage_counts(raw, quality, exact, neardup, hash_bucket)
 
 
@@ -10678,21 +10474,8 @@ def _lsh_recall_audit_body(docs: DataFrame) -> DataFrame:
         "doc_id", F.array_distinct(shingles("text", 3)).alias("s")
     )
     sh = shs.select("doc_id", F.explode("s").alias("s"))
-    sig = _minhash_sig(sh)
-    bands = _minhash_band_rows(sig)
-    cand = (
-        bands.select(F.col("doc_id").alias("id_a"), "band", "v0", "v1", "v2", "v3")
-        .join(
-            bands.select(
-                F.col("doc_id").alias("id_b"), "band", "v0", "v1", "v2", "v3"
-            ),
-            ["band", "v0", "v1", "v2", "v3"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .transform(_persist)
-    )
+    bands = minhash_band_rows(md5_minhash_signatures(sh))
+    cand = bucket_pairs(bands, _MD5_BUCKET_KEYS).transform(_persist)
     t = truth.agg(F.count("*").alias("n_true"))
     c = cand.agg(F.count("*").alias("n_cand"))
     h = truth.join(cand, ["id_a", "id_b"]).agg(F.count("*").alias("n_hit"))
@@ -10875,36 +10658,9 @@ def q_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.array_distinct(shingles("text", 3)).alias("s")
     ).transform(_persist)
     sh = shs.select("doc_id", F.explode("s").alias("s"))
-    sig = _persist(_minhash_sig(sh))
-    bands = _minhash_band_rows(sig)
-    cand = (
-        bands.select(F.col("doc_id").alias("id_a"), "band", "v0", "v1", "v2", "v3")
-        .join(
-            bands.select(
-                F.col("doc_id").alias("id_b"), "band", "v0", "v1", "v2", "v3"
-            ),
-            ["band", "v0", "v1", "v2", "v3"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    near_pairs = (
-        cand.join(
-            shs.select(F.col("doc_id").alias("id_a"), F.col("s").alias("__sa")),
-            "id_a",
-        )
-        .join(
-            shs.select(F.col("doc_id").alias("id_b"), F.col("s").alias("__sb")),
-            "id_b",
-        )
-        .filter(
-            F.size(F.array_intersect("__sa", "__sb")).cast("double")
-            / F.size(F.array_distinct(F.concat("__sa", "__sb"))).cast("double")
-            >= 0.5
-        )
-        .select("id_a", "id_b")
-    )
+    sig = _persist(md5_minhash_signatures(sh))
+    cand = bucket_pairs(minhash_band_rows(sig), _MD5_BUCKET_KEYS)
+    near_pairs = verify_jaccard_pairs(cand, shs, 0.5).select("id_a", "id_b")
     near_surv = near_pairs.groupBy(F.col("id_b").alias("doc_id")).agg(
         F.min("id_a").alias("__nsurv")
     )
@@ -11367,9 +11123,9 @@ def q_lsh_cost_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "w", F.array_distinct(shingles("text", 3)).alias("s")
     )
     sh = shs.select("doc_id", "w", F.explode("s").alias("s"))
-    sig = _minhash_sig(sh, carry=("w",))
-    bands = _minhash_band_rows(sig, carry=("w",))
-    buckets = bands.groupBy("band", "v0", "v1", "v2", "v3").agg(
+    sig = md5_minhash_signatures(sh, carry=("w",))
+    bands = minhash_band_rows(sig, carry=("w",))
+    buckets = bands.groupBy(*_MD5_BUCKET_KEYS).agg(
         F.sum("w").alias("k")
     )
     return buckets.groupBy("band").agg(
@@ -15618,7 +15374,7 @@ def q_winnow_dedup_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     size by output contract), each df-capped fingerprint bucket
     contributes STAR edges (bucket-min rep -> member), star components
     equal clique components (the executed-equivalence argument of
-    lsh_bucket_star_edges, operators/dedup.py), and pointer-jumping
+    bucket_star_edges, operators/dedup.py), and pointer-jumping
     connected components collapse them to min-id survivors. Candidate
     volume is LINEAR in corpus size: <= 9 star edges per capped
     fingerprint, never a pairwise join. Output: the surviving

@@ -40,6 +40,69 @@ def test_exact_dedup_normalizes_and_keeps_min_id(spark):
     assert ids == [0, 2, 3]
 
 
+def _exact_dedup_reference(df):
+    from breweries_data_pipeline_spark.operators.clean import deduplicate
+    from breweries_data_pipeline_spark.operators.text import with_fingerprint
+
+    return deduplicate(with_fingerprint(df), ["fingerprint"], order_by=["doc_id"])
+
+
+def test_exact_dedup_hot_fingerprint_matches_window_form(spark):
+    """One fingerprint owns most rows (the boilerplate-page shape the
+    aggregate + semi-join plan exists for): the survivors must be the
+    rows the row_number window form keeps, column for column."""
+    rows = [(i, "  Boilerplate  FOOTER text " if i % 10 else "BOILERPLATE footer TEXT")
+            for i in range(3, 200)]
+    rows += [(1, "a unique page"), (2, "another unique page"), (500, "a unique page")]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    got = exact_dedup(df)
+    assert got.columns == ["doc_id", "text", "fingerprint"]
+    assert sorted(got.collect()) == sorted(_exact_dedup_reference(df).collect())
+    assert sorted(r.doc_id for r in got.collect()) == [1, 2, 3]
+
+
+def test_exact_dedup_empty_input(spark):
+    df = spark.createDataFrame([], "doc_id bigint, text string")
+    got = exact_dedup(df)
+    assert got.collect() == [] == _exact_dedup_reference(df).collect()
+    assert got.schema == _exact_dedup_reference(df).schema
+
+
+def test_md5_minhash_signatures_null_and_short_docs(spark):
+    """Pins what degenerate documents produce in the md5 signature
+    table: a doc with fewer than 3 tokens shingles to ONE whole-doc
+    shingle and gets a full 16-lane signature equal to that shingle's
+    lanes; null text shingles to the single empty-string shingle; a
+    null shingle in the stream is dropped, so a doc whose only
+    shingle is null has no signature row at all."""
+    from breweries_data_pipeline_spark.functions.text import shingles
+    from breweries_data_pipeline_spark.operators.dedup import (
+        md5_minhash_signatures,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "two tokens"), (2, None), (3, "one two three four")],
+        "doc_id bigint, text string",
+    )
+    sh = docs.select(
+        "doc_id", F.explode(F.array_distinct(shingles("text", 3))).alias("s")
+    ).unionByName(spark.createDataFrame([(4, None)], "doc_id bigint, s string"))
+    assert sorted((r.doc_id, r.s) for r in sh.collect() if r.doc_id in (1, 2, 4)) == [
+        (1, "two tokens"), (2, ""), (4, None),
+    ]
+    sig = {r.doc_id: r for r in md5_minhash_signatures(sh).collect()}
+    assert sorted(sig) == [1, 2, 3]
+    lanes = [f"h{i}" for i in range(16)]
+    for d in (1, 2, 3):
+        assert all(sig[d][c] is not None for c in lanes)
+    # a one-shingle doc's minima ARE that shingle's lanes
+    alone = md5_minhash_signatures(
+        spark.createDataFrame([(9, "two tokens")], "doc_id bigint, s string")
+    ).collect()[0]
+    assert [alone[c] for c in lanes] == [sig[1][c] for c in lanes]
+    assert [sig[1][c] for c in lanes] != [sig[2][c] for c in lanes]
+
+
 def test_minhash_identical_docs_identical_signatures(spark):
     sigs = {r.doc_id: r.minhash for r in minhash_signatures(_docs(spark)).collect()}
     assert sigs[0] == sigs[1]
@@ -362,52 +425,62 @@ def test_shingle_index_path_roundtrip_and_format_guard(spark, tmp_path):
 
 
 def test_bucket_star_survivors_equal_clique_survivors(spark, sf_dir):
-    """Star-vs-clique CC equivalence EXECUTED, not argued: on the real
-    corpus, bucket-star edges (lsh_bucket_star_edges — one edge per
-    non-min member, linear) and the bucket's full C(n,2) clique edges
-    (quadratic self-join) must yield identical connected components,
-    hence identical dedup survivors."""
+    """Star-vs-clique CC equivalence EXECUTED, not argued, for both
+    bucket key forms: on the real corpus, bucket-star edges (one edge
+    per non-min member, linear) and the buckets' full C(n,2) clique
+    edges (quadratic self-join) must yield identical connected
+    components, hence identical dedup survivors — on the Arrow path's
+    (band, band_hash) buckets and on the md5 path's (band, v0..v3)
+    buckets."""
+    from breweries_data_pipeline_spark.functions.text import shingles
     from breweries_data_pipeline_spark.operators.dedup import (
+        bucket_pairs,
+        bucket_star_edges,
+        drop_non_representatives,
         lsh_bucket_star_edges,
         lsh_candidate_pairs,
-    )
-    from breweries_data_pipeline_spark.operators.graph import (
-        connected_components,
+        md5_minhash_signatures,
+        minhash_band_rows,
     )
     from breweries_data_pipeline_spark.sources import read_table
 
     docs = read_table(spark, sf_dir, "documents")
+
+    def survivors(edges):
+        return {
+            r.doc_id
+            for r in drop_non_representatives(docs, edges, "doc_id")
+            .select("doc_id")
+            .collect()
+        }
+
     sigs = minhash_signatures(docs, "text", "doc_id", 64, 3).select(
         "doc_id", "minhash"
     )
     sigs.persist()
     try:
-
-        def survivors(edges):
-            paired = (
-                edges.select(F.col("id_a").alias("doc_id"))
-                .unionByName(edges.select(F.col("id_b").alias("doc_id")))
-                .distinct()
-            )
-            comp = connected_components(
-                edges, paired, src="id_a", dst="id_b", id_col="doc_id"
-            )
-            drop = comp.filter(
-                F.col("doc_id") != F.col("cluster_id")
-            ).select("doc_id")
-            return {
-                r.doc_id
-                for r in docs.join(drop, "doc_id", "left_anti")
-                .select("doc_id")
-                .collect()
-            }
-
         star = survivors(lsh_bucket_star_edges(sigs, "doc_id", 16, 4))
         clique = survivors(lsh_candidate_pairs(sigs, "doc_id", 16, 4))
         assert star == clique
         assert len(star) > 0
     finally:
         sigs.unpersist()
+
+    sh = docs.select(
+        "doc_id", F.explode(F.array_distinct(shingles("text", 3))).alias("s")
+    )
+    bands = minhash_band_rows(md5_minhash_signatures(sh))
+    bands.persist()
+    try:
+        keys = ["band", "v0", "v1", "v2", "v3"]
+        md5_star = survivors(
+            bucket_star_edges(bands, keys).select("id_a", "id_b").distinct()
+        )
+        md5_clique = survivors(bucket_pairs(bands, keys))
+        assert md5_star == md5_clique
+        assert 0 < len(md5_star) < docs.count()
+    finally:
+        bands.unpersist()
 
 
 def test_fingerprint_index_matches_byte_faithful_twin(spark, sf_dir):
