@@ -8,8 +8,8 @@ from breweries_data_pipeline_spark.operators.clean import (  # noqa: F401
 )
 from breweries_data_pipeline_spark.operators.aggregate import (  # noqa: F401
     declarative_aggregate,
+    gold_views,
     grouped_count,
-    union_views,
 )
 from breweries_data_pipeline_spark.operators.quality import (  # noqa: F401
     evaluate_rules,

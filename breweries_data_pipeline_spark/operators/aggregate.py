@@ -3,24 +3,29 @@
 ``declarative_aggregate`` implements the reference's *declared* config
 contract (configs/breweries_gold_pipeline.yml:41-51 — group_by list +
 named metric exprs) which the reference's code never actually honours
-(it hard-codes three groupBy-counts instead). ``union_views``
-reproduces the reference's distinctive Gold output shape: heterogeneous
-aggregate views stacked long-format with a discriminator column and
+(it hard-codes three groupBy-counts instead). ``gold_views`` produces
+the reference's distinctive Gold output shape: heterogeneous aggregate
+views stacked long-format with a discriminator column and
 missing-columns-as-nulls (breweries_aggregate_gold_notebook.py:37-60).
 
 Scale notes: groupBy compiles to partial (map-side) + final hash
 aggregation — the shuffle moves only group keys × partial states, not
-rows. The union is plan-level (no data movement). A rollup/cube/
-grouping-sets over the same keys is usually cheaper than N separate
-groupBys when the views share a scan; ``union_views`` exists for the
-heterogeneous-keys case where they don't.
+rows. The reference builds its Gold table as N groupBys unioned, which
+scans and shuffles the input once per view. ``gold_views`` compiles all
+views into ONE grouping-sets aggregate instead — one scan, one Expand,
+one partial aggregate, one shuffle — whatever the views' keys: the
+grouping keys are the union of every view's keys, and each output row
+is routed to its view(s) by ``grouping_id()``. Expand multiplies the
+rows entering the partial aggregate by the number of distinct key sets,
+which the map-side combine reduces before the shuffle.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,26 +57,94 @@ def declarative_aggregate(
     return df.agg(*aggs)
 
 
-def union_views(
-    views: dict[str, DataFrame],
+def gold_views(
+    df: DataFrame,
+    specs: list[dict[str, Any]],
     *,
     tag_column: str = "aggregation",
     stamp_column: str | None = "transformation_date",
     stamp_value: Any | None = None,
 ) -> DataFrame:
-    """Stack heterogeneous aggregate views long-format (reference U1 +
-    P2/P3): each view gets a literal ``tag_column`` naming it, views
-    are combined with ``unionByName(allowMissingColumns=True)`` so
-    columns absent from a view become null, and an optional literal
-    stamp column is appended (injected, not ``date.today()``).
+    """Compute declared aggregate views and stack them long-format
+    (reference U1 + P2/P3) in ONE grouping-sets aggregate over one scan.
+
+    ``specs``: ``[{name, group_by: [...], metrics: [{name, expr}]}]``.
+    The result equals ``declarative_aggregate`` per view, each tagged
+    with a literal ``tag_column`` naming it, combined with
+    ``unionByName(allowMissingColumns=True)`` and stamped with a literal
+    ``stamp_column`` when ``stamp_value`` is given (injected, not
+    ``date.today()``): same columns in the same order — first view's
+    keys, metrics and tag, then each later view's new columns, then the
+    stamp — with typed nulls where a view lacks a column.
+
+    A view's rows are selected by ``grouping_id()``, not by key
+    nullness, so null key values stay in their own groups. Views with an
+    empty ``group_by`` are computed with ``df.agg`` and unioned on: the
+    empty grouping set yields no row over empty input, a global
+    aggregate yields one.
     """
-    tagged = [df.withColumn(tag_column, F.lit(name)) for name, df in views.items()]
-    out = tagged[0]
-    for df in tagged[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
-    if stamp_column is not None and stamp_value is not None:
-        out = out.withColumn(stamp_column, F.lit(stamp_value))
-    return out
+    if not specs:
+        raise ValueError("gold_views requires at least one view")
+    if any(not s["metrics"] for s in specs):
+        raise ValueError("declarative aggregate requires at least one metric")
+    # one aggregate column per distinct (name, expr), shared by the views
+    # that declare it
+    metric_cols: dict[tuple[str, str], str] = {}
+    for s in specs:
+        for m in s["metrics"]:
+            metric_cols.setdefault((m["name"], m["expr"]), f"__m{len(metric_cols)}")
+    stamped = stamp_column is not None and stamp_value is not None
+    columns = list(dict.fromkeys([
+        *(c
+          for s in specs
+          for c in [*s.get("group_by", []), *(m["name"] for m in s["metrics"]), tag_column]),
+        *([stamp_column] if stamped else []),
+    ]))
+
+    def view_columns(spec: dict[str, Any]) -> list[Column]:
+        have = {k: F.col(k) for k in spec.get("group_by", [])}
+        have.update(
+            (m["name"], F.col(metric_cols[(m["name"], m["expr"])]))
+            for m in spec["metrics"]
+        )
+        have[tag_column] = F.lit(spec["name"])
+        if stamped:
+            have[stamp_column] = F.lit(stamp_value)
+        return [have.get(c, F.lit(None)).alias(c) for c in columns]
+
+    def aggregates(views: list[dict[str, Any]]) -> list[Column]:
+        exprs = {metric_cols[(m["name"], m["expr"])]: m["expr"]
+                 for s in views for m in s["metrics"]}
+        return [F.expr(e).alias(c) for c, e in exprs.items()]
+
+    parts = []
+    grouped = [s for s in specs if s.get("group_by")]
+    if grouped:
+        keys = list(dict.fromkeys(k for s in grouped for k in s["group_by"]))
+
+        def gid(spec: dict[str, Any]) -> int:
+            # grouping_id(): bit (n-1-i) is set when keys[i] is NOT grouped
+            return sum(1 << (len(keys) - 1 - i)
+                       for i, k in enumerate(keys) if k not in spec["group_by"])
+
+        sets = list(dict.fromkeys(
+            tuple(k for k in keys if k in s["group_by"]) for s in grouped
+        ))
+        agg = df.groupingSets([list(ks) for ks in sets], *keys).agg(
+            *aggregates(grouped), F.grouping_id().alias("__gid")
+        )
+        view_gids = F.array(*[F.lit(gid(s)) for s in grouped])
+        rows = F.array(*[F.struct(*view_columns(s)) for s in grouped])
+        # a non-null array keeps each field's own nullability through inline
+        parts.append(agg.select(F.inline(
+            F.filter(rows, lambda _, i: view_gids[i] == F.col("__gid"))
+        )))
+    parts += [
+        df.agg(*aggregates([s])).select(*view_columns(s))
+        for s in specs
+        if not s.get("group_by")
+    ]
+    return reduce(DataFrame.union, parts)
 
 
 def mode_agg(df: DataFrame, keys: list[str], value_col: str, out: str = "mode") -> DataFrame:

@@ -33,14 +33,11 @@ from dataclasses import dataclass, field
 from typing import Any, Callable
 
 import yaml
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from breweries_data_pipeline_spark.operators.aggregate import (
-    declarative_aggregate,
-    union_views,
-)
+from breweries_data_pipeline_spark.operators.aggregate import gold_views
 from breweries_data_pipeline_spark.operators.clean import (
     cast_columns,
     deduplicate,
@@ -235,7 +232,9 @@ def run_transform_stage(
     Clean defaults derived from metadata when not declared:
     dedup key = first schema column; required = non-nullable schema
     columns present in the input; trim/lower = all string columns when
-    the ``normalize`` flags are on."""
+    the ``normalize`` flags are on. Rows missing a required field are
+    dropped before dedup, so with ``dedup_order_by`` the first VALID
+    row per key survives."""
     p = stage.parameters
     meta = load_metadata(paths.resolve(p["metadata_path"]))
     norm = p.get("normalize", {}) or {}
@@ -246,8 +245,11 @@ def run_transform_stage(
     required = norm.get("required") or [
         f.name for f in meta.schema.fields if not f.nullable
     ]
-    df = deduplicate(df, dedup_keys, order_by=norm.get("dedup_order_by"))
+    # drop invalid rows BEFORE dedup: an id whose copies differ in
+    # validity then keeps a valid copy whatever the task order, and the
+    # dedup shuffle moves fewer rows
     df = drop_null_required(df, required)
+    df = deduplicate(df, dedup_keys, order_by=norm.get("dedup_order_by"))
     if norm.get("trim_strings") or norm.get("lowercase_cols"):
         df = normalize_strings(df, _string_columns(meta.schema))
     casts = {
@@ -280,22 +282,25 @@ def run_aggregate_stage(
     """Gold: declarative aggregations unioned long-format with a view
     discriminator + stamp (reference
     breweries_aggregate_gold_notebook.py:32-68, realizing the declared
-    config contract configs/breweries_gold_pipeline.yml:41-51)."""
+    config contract configs/breweries_gold_pipeline.yml:41-51), all
+    views computed by ``gold_views`` in one grouping-sets aggregate
+    over one silver scan — the reference scans and shuffles silver once
+    per view."""
     p = stage.parameters
     df = spark.read.parquet(paths.resolve(p["input_path"]))
-    views: dict[str, DataFrame] = {}
-    for spec in p["aggregations"]:
-        views[spec["name"]] = declarative_aggregate(
-            df, spec.get("group_by", []), spec["metrics"]
-        )
-    gold = union_views(views, stamp_value=paths.variables.get("ds"))
+    specs = p["aggregations"]
+    gold = gold_views(df, specs, stamp_value=paths.variables.get("ds"))
     out = paths.resolve(p["output_path"])
     from pyspark.sql import Observation
 
     obs = Observation(f"gold_{stage.task_id}")
     gold = gold.observe(obs, F.count(F.lit(1)).alias("rows"))
     write_parquet(gold, out)
-    return {"output_path": out, "views": sorted(views), "rows": obs.get["rows"]}
+    return {
+        "output_path": out,
+        "views": sorted(s["name"] for s in specs),
+        "rows": obs.get["rows"],
+    }
 
 
 def run_quality_stage(

@@ -30,11 +30,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard conf.
 
-    In local/test mode ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``;
-    on a cluster pass ``master=None`` with a pre-set spark.master, or let
-    spark-submit own it.
+    In local/test mode ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``,
+    or, when that is unset, to the cores this process may run on (its
+    CPU affinity, what ``nproc`` prints); on a cluster pass
+    ``master=None`` with a pre-set spark.master, or let spark-submit
+    own it.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if master is None and "SPARK_MASTER" not in os.environ:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -1721,3 +1721,46 @@ def test_chunk_kernel_matches_duckdb_oracle_on_leading_whitespace():
         ).fetchall()
         kernel = list(chunk_tokens_py(text, 2))
         assert kernel == [tuple(r) for r in oracle], repr(text)
+
+
+# ---------------------------------------------------------------- session
+
+
+def test_get_spark_defaults_cores_to_cpu_affinity(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the local master and shuffle partitions
+    come from the cores this process may run on, not a fixed 32."""
+    from types import SimpleNamespace
+
+    from breweries_data_pipeline_spark import session
+
+    class Builder:
+        def __init__(self):
+            self.conf, self.master_url = {}, None
+
+        def appName(self, name):
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def master(self, url):
+            self.master_url = url
+            return self
+
+        def getOrCreate(self):
+            return self
+
+    for env in ("SPARK_GRAFT_CPUS", "SPARK_MASTER"):
+        monkeypatch.delenv(env, raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    built = session.get_spark("t")
+    assert built.master_url == "local[3]"
+    assert built.conf["spark.sql.shuffle.partitions"] == "3"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    built = session.get_spark("t")
+    assert built.master_url == "local[2]"
+    assert built.conf["spark.sql.shuffle.partitions"] == "2"
